@@ -332,9 +332,12 @@ class SeqTable:
     def get_quality_dist(self, positions=None, bins="even",
                          exclude_null_quality=True, sample=None,
                          percentiles=(10, 25, 50, 75, 90)) -> DataFrame:
-        """Reference get_quality_dist (seqtables.py:1328-1377)."""
+        """Reference get_quality_dist (seqtables.py:1328-1377). Eager:
+        one job collects the (position, qual) histogram."""
         from .operators.quality import quality_dist
 
+        if not self.has_quality:
+            raise ValueError("table has no quality data")
         cells = self.cells()
         if positions is not None:
             cells = cells.filter(F.col("position").isin(list(positions)))
@@ -387,12 +390,14 @@ class SeqTable:
         a DataFrame(position, letter, weight) or a nested list shaped
         like the reference's positions x letters matrix.
 
-        Round 9: routed through the row-local string fold
+        Routed through the row-local string fold
         (operators.pwm.calculate_pwm_seq) - cells() here is a pure
         derivation of self.reads, so folding over the intact seq string
         is equivalent to the explode->join->groupBy formulation minus
-        two shuffles (the reference kernel, numpy_ops.py:462-516, is
-        row-local too).
+        two shuffles. Like the reference kernel (numpy_ops.py:462-516)
+        each cell's weight is an O(1) lookup in a dense matrix: a flat
+        literal array indexed by (position, letter slot). Duplicate
+        (position, letter) entries raise ValueError.
 
         SEMANTIC NOTE (differs from the retired join formulation in
         two edge cases, matching the reference's dense-matrix kernel):

@@ -1,13 +1,18 @@
 """Position-weight-matrix scoring.
 
-Parity target: calculate_pwm /root/reference/seqtables/core/
+Parity target: calculate_pwm in the reference's seqtables/core/
 seqtables.py:874-880; kernel seq_pwm_ascii_map_and_score
-numpy_ops.py:462-516 (the 256-wide ASCII-indexed lookup is the
-reference's perfect-hash trick; relationally it is just a broadcast
-map join on (position, letter)).
+numpy_ops.py:462-516 (a 256-wide ASCII-indexed lookup: constant work
+per cell).
 
-Scale: the PWM is |positions| x |alphabet| rows - always broadcast.
-One groupBy(read_id) shuffle whose payload is a single double.
+Two formulations:
+  - calculate_pwm: cells -> broadcast join on (position, letter) ->
+    groupBy(read_id). One shuffle whose payload is a single double;
+    kept for masked/exploded inputs.
+  - calculate_pwm_seq: the reference's lookup as a row-local fold over
+    the seq string. The PWM is a flat literal array indexed by
+    (covered position, letter slot), so a cell costs O(1) and the plan
+    has no Exchange, Generate or Join.
 """
 
 from __future__ import annotations
@@ -96,22 +101,34 @@ def calculate_pwm_seq(
     shuffle fast path of `calculate_pwm`.
 
     The reference's kernel is itself a row-local ASCII-indexed lookup
-    (seq_pwm_ascii_map_and_score, /root/reference/seqtables/core/
+    (seq_pwm_ascii_map_and_score, reference seqtables/core/
     numpy_ops.py:462-516): each read is scored independently against an
     in-memory matrix. Relationally that is a per-row fold, not a join -
     `calculate_pwm` (above) expresses it as explode -> broadcast join
     -> groupBy(read_id), which shuffles N*P cells to reassemble what
     was already one row. This variant keeps the read row intact and
-    folds the literal (position, letter) -> weight map over the string
-    with `transform`+`aggregate`: zero Exchange, one projection, scales
-    as pure map work at any data size (same pattern as
-    `pairwise_hamming`, operators/compare.py:168).
+    folds over the covered positions with `transform`+`aggregate`: zero
+    Exchange, one projection (same pattern as `pairwise_hamming`,
+    operators/compare.py:168).
+
+    The weights are one flat literal array<double> with |letters| + 1
+    slots per covered position, slot 0 holding null_score; the cell at
+    covered position i with letter ch reads slot
+    i*(|letters|+1) + instr(letters, ch), so a lookup is O(1) whatever
+    the PWM size - the reference's dense-matrix trick. The array and
+    the position list are each built from ONE string literal split and
+    cast JVM-side (`repr` round-trips exactly through Java's
+    parseDouble), so the plan costs O(1) py4j calls. The log is taken
+    JVM-side per lookup and the fold adds left to right over the
+    positions, so scores are bit-identical to the join formulation
+    (same Math.log, same doubles, same addition order).
 
     `pwm` may be the same DataFrame(position, letter, weight) the join
     path takes (collected here - it is |positions| x |alphabet| rows by
     construction, the reference holds the whole matrix in one numpy
     array), a sequence of (position, letter, weight) tuples, or a
-    {(position, letter): weight} mapping.
+    {(position, letter): weight} mapping. Two entries for the same
+    (position, letter) raise ValueError.
 
     PWM position p maps to string index p - pos_start + 1 (cells'
     1-based reference coordinate, model.explode_chars). Positions that
@@ -135,10 +152,13 @@ def calculate_pwm_seq(
         entries = [(int(p), str(c), float(w)) for (p, c), w in pwm.items()]
     else:
         entries = [(int(p), str(c), float(w)) for p, c, w in pwm]
+    weight_of = {}
+    for p, letter, w in entries:
+        if (p, letter) in weight_of:
+            raise ValueError(f"duplicate PWM entry for position {p}, letter {letter!r}")
+        weight_of[(p, letter)] = w
     if positions is not None:
-        pset = {int(p) for p in positions}
-        entries = [e for e in entries if e[0] in pset]
-        pos_list = sorted(pset)
+        pos_list = sorted({int(p) for p in positions})
     else:
         pos_list = sorted({p for p, _, _ in entries})
     if not pos_list:
@@ -147,14 +167,15 @@ def calculate_pwm_seq(
             (F.lit(1.0) if use_log_before_sum else F.lit(0.0)).alias("pwm_score"),
         )
 
-    # literal map keyed "pos:letter" -> raw weight; the log happens
-    # JVM-side per lookup so the log path is numerically identical to
-    # the join formulation (same Math.log, same doubles)
-    map_args: list[Column] = []
-    for p, letter, w in entries:
-        map_args.append(F.lit(f"{p}:{letter}"))
-        map_args.append(F.lit(float(w)))
-    weight_map = F.create_map(*map_args)
+    # a string cell is one character: longer letters can never match
+    letters = "".join(sorted({c for _, c, _ in entries if len(c) == 1}))
+    width = len(letters) + 1
+    ns = float(null_score)
+    weights = []
+    for p in pos_list:
+        weights += [ns] + [weight_of.get((p, c), ns) for c in letters]
+    weight_arr = F.split(F.lit(",".join(map(repr, weights))), ",").cast("array<double>")
+    pos_arr = F.split(F.lit(",".join(map(str, pos_list))), ",").cast("array<int>")
 
     seq = F.col(seq_col)
     ps = (
@@ -162,34 +183,30 @@ def calculate_pwm_seq(
         if pos_start_col and pos_start_col in reads.columns
         else F.lit(1)
     )
-    neg_inf = F.lit(float("-inf"))
-    ns = F.lit(float(null_score))
 
-    def term(p: Column) -> Column:
+    def char_at(p: Column) -> Column:
         idx = p - ps + F.lit(1)
         # substr(0/negative) has from-the-end semantics in Spark - a
-        # position left of the read must be "missing", never a wrap
-        ch = F.when(idx >= 1, seq.substr(idx, F.lit(1))).otherwise(F.lit(""))
-        w = F.coalesce(
-            F.element_at(weight_map, F.concat(p.cast("string"), F.lit(":"), ch)),
-            ns,
-        )
+        # position left of the read must be "missing", never a wrap;
+        # a NULL seq reads as missing everywhere, like the explode path
+        # where split(NULL) yields no cells
+        return F.coalesce(F.when(idx >= 1, seq.substr(idx, F.lit(1))), F.lit(""))
+
+    def value(ch: Column, i: Column) -> Column:
+        w = F.element_at(weight_arr, i * width + 1 + F.instr(F.lit(letters), ch))
         val = (
-            F.when(w > 0, F.log(w)).otherwise(neg_inf)
+            F.when(w > 0, F.log(w)).otherwise(F.lit(float("-inf")))
             if use_log_before_sum
             else w
         )
-        # off-read position -> NULL, filtered before the fold (coalesce:
-        # a NULL seq must read as missing-everywhere, like the explode
-        # path where split(NULL) yields no cells)
-        missing = F.coalesce(F.length(ch), F.lit(0)) == 0
-        return F.when(missing, F.lit(None).cast("double")).otherwise(val)
+        return F.when(F.length(ch) == 0, F.lit(None).cast("double")).otherwise(val)
 
-    pos_arr = F.array(*[F.lit(int(p)) for p in pos_list])
+    # one substr per covered position, then one value per character
+    # (an interpreted lambda re-evaluates every reference, so the
+    # character is computed once, not once per use); NULL = off-read
+    vals = F.transform(F.transform(pos_arr, char_at), value)
     total = F.aggregate(
-        F.filter(F.transform(pos_arr, term), lambda x: x.isNotNull()),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
+        vals, F.lit(0.0), lambda acc, x: F.when(x.isNull(), acc).otherwise(acc + x)
     )
     score = F.exp(total) if use_log_before_sum else total
     return reads.select(F.col(id_col), score.alias("pwm_score"))

@@ -1,30 +1,31 @@
 """Quality-score operators.
 
-Parity targets (file:line in /root/reference):
+Parity targets (file:line in the reference seqtables package):
   - get_quality_dist:  seqtables/core/seqtables.py:1328-1377; kernel
     numpy_ops.py:137-371 (fastqc preset at :203-210 deliberately skips
     the (75,79) bin - replicated verbatim for parity)
   - quality_filter:    seqtables/core/seqtables.py:1223-1258
   - convert_low_bases_to_null: seqtables/core/seqtables.py:1260-1303
 
-Scale notes. quality_dist joins cells against a tiny broadcast bins
-table on a BETWEEN range condition (broadcast nested loop over ~60
-bins - cheap, no shuffle of the big side). Percentiles are EXACT but
-computed from a (bin x qual) histogram rather than a sort-based
-percentile() over the raw cells: phred is a small integer domain
-(~0..45), so one partial+final hash aggregate collapses each map
-partition to at most |bins| x 46 rows before the exchange, and the
-interpolation runs on that tiny table with window functions. At
-100 TB the shuffle carries kilobytes. quality_filter computes the
-per-read pass predicate with a single groupBy(read_id) and applies
-it with LEFT SEMI joins; no data is collected to the driver.
+Scale notes. quality_dist is eager, like the reference: ONE Spark job
+computes the (position, qual) histogram with a partial+final hash
+aggregate and collects it. Phred is a small integer domain (~0..45),
+so the histogram has at most |positions| x |phred| rows whatever the
+number of reads. Bin assignment and the exact percentiles then run on
+the driver over that tiny table, and the result comes back as a local
+DataFrame (no Exchange, no Join). quality_filter computes the per-read
+pass predicate with a single groupBy(read_id) and applies it with LEFT
+SEMI joins; no data is collected to the driver.
 """
 
 from __future__ import annotations
 
+import math
+from bisect import bisect_left, bisect_right
+from collections import Counter
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, functions as F, types as T
 
 from ..model import SeqTable
 
@@ -50,80 +51,24 @@ def even_bins(min_position: int, max_position: int, n: int = 10) -> list[tuple[i
     return out
 
 
-#: positions spanned beyond which the literal-array bin lookup would
-#: bloat the plan; such bin tables fall back to the broadcast range join
-_BIN_LOOKUP_MAX_SPAN = 8192
-
-
-def _attach_bins(spark, qcells: DataFrame, bin_list) -> DataFrame:
-    """Attach (bin_name, bin_lo, bin_hi) to each cell row and drop
-    rows covered by no bin (inner-join semantics, e.g. the fastqc
-    (75,79) gap).
-
-    Fast path (round 12, guide §3): when the bins are non-overlapping
-    and span a bounded position domain — always true for the
-    even/fastqc presets, whose positions are read offsets — the
-    assignment is a row-local ``element_at`` on literal arrays
-    indexed by position. The previous broadcast range join planned as
-    a BroadcastNestedLoopJoin that evaluated every bin's BETWEEN
-    predicate against every cell row (|bins| ~ 60 comparisons/cell);
-    the lookup is O(1) per row and removes the join node entirely.
-    Overlapping or unbounded bin tables keep the range join (a
-    position matching several bins must emit one row per match)."""
-    if not bin_list:
-        # r12 ADVICE: min() over an empty bin list raised ValueError
-        # where the range-join path it replaced returned an empty
-        # DataFrame; preserve the old contract.
-        return qcells.withColumns(
-            {
-                "bin_name": F.lit(None).cast("string"),
-                "bin_lo": F.lit(None).cast("long"),
-                "bin_hi": F.lit(None).cast("long"),
-            }
-        ).filter(F.lit(False))
-    lo_all = min(lo for lo, _ in bin_list)
-    hi_all = max(hi for _, hi in bin_list)
-    span = hi_all - lo_all + 1
-    non_overlapping = all(
-        a[1] < b[0] for a, b in zip(sorted(bin_list), sorted(bin_list)[1:])
-    )
-    if non_overlapping and 0 < span <= _BIN_LOOKUP_MAX_SPAN:
-        names: list[str | None] = [None] * span
-        los: list[int | None] = [None] * span
-        his: list[int | None] = [None] * span
-        for lo, hi in bin_list:
-            nm = f"{lo}-{hi}" if lo != hi else str(lo)
-            for p in range(lo, hi + 1):
-                names[p - lo_all] = nm
-                los[p - lo_all] = lo
-                his[p - lo_all] = hi
-        name_arr = F.array(*[F.lit(n).cast("string") for n in names])
-        lo_arr = F.array(*[F.lit(v).cast("long") for v in los])
-        hi_arr = F.array(*[F.lit(v).cast("long") for v in his])
-        idx = (F.col("position") - F.lit(lo_all) + 1).cast("int")
-        return (
-            qcells.filter(
-                F.col("position").between(F.lit(lo_all), F.lit(hi_all))
-            )
-            .withColumns(
-                {
-                    "bin_name": F.element_at(name_arr, idx),
-                    "bin_lo": F.element_at(lo_arr, idx),
-                    "bin_hi": F.element_at(hi_arr, idx),
-                }
-            )
-            .filter(F.col("bin_name").isNotNull())
-        )
-    bins_df = spark.createDataFrame(
-        spark.sparkContext.parallelize(
-            [(f"{lo}-{hi}" if lo != hi else str(lo), lo, hi) for lo, hi in bin_list], 1
-        ),
-        "bin_name string, bin_lo long, bin_hi long",
-    )
-    return qcells.join(
-        F.broadcast(bins_df),
-        (F.col("position") >= F.col("bin_lo")) & (F.col("position") <= F.col("bin_hi")),
-    )
+def _percentile(hist: list[tuple[int, int]], n: int, p: int) -> float | None:
+    """Exact linear-interpolated percentile of a sorted (qual, count)
+    histogram: rank = p/100*(n-1), v = v[floor] + frac*(v[ceil] - v[floor]),
+    the same double operations the numpy/Spark `percentile` performs."""
+    rk = float(n - 1) * (p / 100.0)
+    lo, hi = math.floor(rk), math.ceil(rk)
+    if lo < 0 or hi >= n:
+        return None
+    v_lo = v_hi = None
+    cum = 0
+    for q, c in hist:
+        if v_lo is None and lo < cum + c:
+            v_lo = q
+        if hi < cum + c:
+            v_hi = q
+            break
+        cum += c
+    return v_lo + (rk - lo) * (v_hi - v_lo)
 
 
 def quality_dist(
@@ -136,86 +81,79 @@ def quality_dist(
 ) -> DataFrame:
     """FASTQC-style binned quality distribution.
 
-    Returns one row per bin: (bin_name, bin_lo, bin_hi, mean, median,
-    min, max, p0, p10, p25, p50, p75, p90, p100, ... user percentiles).
-    The percentile set always includes {0,10,25,50,75,90,100} like the
-    reference (numpy_ops.py:251-257). Percentiles are exact with
-    linear interpolation (numpy/Spark `percentile` semantics:
-    rank = p*(n-1), v = v[floor] + frac*(v[ceil] - v[floor])), computed
-    from the per-bin quality histogram - see module docstring.
+    Returns one row per bin holding data: (bin_name, bin_lo, bin_hi,
+    mean, median, min, max, p0, p10, p25, p50, p75, p90, p100, ... user
+    percentiles). The percentile set always includes
+    {0,10,25,50,75,90,100} like the reference (numpy_ops.py:251-257).
+    Percentiles are exact with linear interpolation (numpy/Spark
+    `percentile` semantics), computed from the per-bin quality
+    histogram. A position covered by several bins counts in each; a
+    position covered by none (e.g. the fastqc (75,79) gap) is dropped.
+
+    Eager: runs one job to collect the (position, qual) histogram - see
+    module docstring - and returns a local DataFrame.
     """
     qcells = cells.filter(F.col("qual").isNotNull())
     if exclude_null_quality:
         qcells = qcells.filter(F.col("qual") > 0)
     if sample_fraction:
         qcells = qcells.sample(fraction=sample_fraction, seed=seed)
+    qual_type = qcells.schema["qual"].dataType
 
-    if isinstance(bins, str):
-        lohi = qcells.agg(F.min("position"), F.max("position")).first()
-        min_pos, max_pos = int(lohi[0]), int(lohi[1])
-        bin_list = fastqc_bins(max_pos) if bins == "fastqc" else even_bins(min_pos, max_pos)
-        bin_list = [b for b in bin_list if b[0] >= min_pos and b[0] <= max_pos]
-    else:
+    by_pos: dict[int, list[tuple[int, int]]] = {}
+    for pos, q, c in (
+        qcells.filter(F.col("position").isNotNull())
+        .groupBy("position", "qual")
+        .count()
+        .collect()
+    ):
+        by_pos.setdefault(pos, []).append((q, c))
+
+    if not isinstance(bins, str):
         bin_list = [(int(lo), int(hi)) for lo, hi in bins]
-
-    spark = SparkSession.getActiveSession()
-    joined = _attach_bins(spark, qcells, bin_list)
+    elif by_pos:
+        min_pos, max_pos = min(by_pos), max(by_pos)
+        bin_list = fastqc_bins(max_pos) if bins == "fastqc" else even_bins(min_pos, max_pos)
+        bin_list = [b for b in bin_list if min_pos <= b[0] <= max_pos]
+    else:  # no cell has quality: a preset has no positions to bin
+        bin_list = []
     pset = sorted(set(int(p) for p in percentiles) | {0, 10, 25, 50, 75, 90, 100})
 
-    # (bin x qual) histogram: the ONLY aggregation that sees the raw
-    # cells; partial aggregation bounds the shuffle at |bins|*|phred|.
-    hist = joined.groupBy("bin_name", "bin_lo", "bin_hi", "qual").agg(
-        F.count(F.lit(1)).alias("c")
-    )
-    bywin = Window.partitionBy("bin_name")
-    cumwin = bywin.orderBy("qual").rowsBetween(Window.unboundedPreceding, 0)
-    hist = (
-        hist.withColumn("cum", F.sum("c").over(cumwin))
-        .withColumn("cum_lo", F.col("cum") - F.col("c"))
-        .withColumn("n", F.sum("c").over(bywin))
-        .withColumn("qc_sum", F.sum(F.col("qual") * F.col("c")).over(bywin))
-    )
+    # a repeated bin accumulates its positions once per repetition, as
+    # a range join would emit one row per match
+    sorted_pos = sorted(by_pos)
+    bin_hist: dict[tuple[int, int], Counter] = {}
+    for lo, hi in bin_list:
+        acc = bin_hist.setdefault((lo, hi), Counter())
+        for pos in sorted_pos[bisect_left(sorted_pos, lo):bisect_right(sorted_pos, hi)]:
+            for q, c in by_pos[pos]:
+                acc[q] += c
 
-    pct_df = F.broadcast(
-        spark.createDataFrame(
-            spark.sparkContext.parallelize([(p, p / 100.0) for p in pset], 1),
-            "p long, frac double",
-        )
+    rows = []
+    for (lo, hi), acc in bin_hist.items():
+        if not acc:
+            continue
+        hist = sorted(acc.items())
+        n = sum(acc.values())
+        pct = {p: _percentile(hist, n, p) for p in pset}
+        rows.append((
+            f"{lo}-{hi}" if lo != hi else str(lo), lo, hi,
+            float(sum(q * c for q, c in hist)) / n, pct[50],
+            hist[0][0], hist[-1][0], *(pct[p] for p in pset),
+        ))
+    schema = T.StructType(
+        [
+            T.StructField("bin_name", T.StringType(), False),
+            T.StructField("bin_lo", T.LongType(), False),
+            T.StructField("bin_hi", T.LongType(), False),
+            T.StructField("mean", T.DoubleType()),
+            T.StructField("median", T.DoubleType()),
+            T.StructField("min", qual_type),
+            T.StructField("max", qual_type),
+        ]
+        + [T.StructField(f"p{p}", T.DoubleType()) for p in pset]
     )
-    rk = (F.col("n") - 1).cast("double") * F.col("frac")
-    # a histogram row holds sorted indexes [cum_lo, cum); pick the rows
-    # covering the two indexes that bracket the fractional rank
-    covers = lambda idx: (idx >= F.col("cum_lo")) & (idx < F.col("cum"))  # noqa: E731
-    vals = (
-        hist.join(pct_df, how="cross")
-        .withColumn("rk", rk)
-        .groupBy("bin_name", "bin_lo", "bin_hi", "p")
-        .agg(
-            F.max(F.when(covers(F.floor("rk")), F.col("qual"))).alias("v_lo"),
-            F.max(F.when(covers(F.ceil("rk")), F.col("qual"))).alias("v_hi"),
-            F.max("rk").alias("rk"),
-            F.max("n").alias("n"),
-            F.max("qc_sum").alias("qc_sum"),
-            F.min(F.when(F.col("cum_lo") == 0, F.col("qual"))).alias("minq"),
-            F.max(F.when(F.col("cum") == F.col("n"), F.col("qual"))).alias("maxq"),
-        )
-        .withColumn(
-            "val",
-            F.col("v_lo")
-            + (F.col("rk") - F.floor("rk")) * (F.col("v_hi") - F.col("v_lo")),
-        )
-    )
-    out = vals.groupBy("bin_name", "bin_lo", "bin_hi").agg(
-        (F.max("qc_sum").cast("double") / F.max("n")).alias("mean"),
-        F.max(F.when(F.col("p") == 50, F.col("val"))).alias("median"),
-        F.max("minq").alias("min"),
-        F.max("maxq").alias("max"),
-        *[
-            F.max(F.when(F.col("p") == p, F.col("val"))).alias(f"p{p}")
-            for p in pset
-        ],
-    )
-    return out
+    return cells.sparkSession.createDataFrame(rows, schema)
 
 
 def quality_filter(

@@ -9,8 +9,8 @@ silently when an operator is refactored. These tests pin them:
   - per-position aggregations are hash aggregates with a map-side
     partial before the exchange (the shuffle carries the collapsed
     distribution, not the exploded cells),
-  - quality_dist never falls back to a sort-based / object-hash
-    aggregate (its percentiles come from the tiny histogram),
+  - quality_dist returns a local relation (its percentiles come from
+    a histogram collected inside the call),
   - parquet scans under a filter push the predicate into the scan.
 
 The assertions read the pre-execution executedPlan string (the
@@ -70,11 +70,14 @@ def test_seq_dist_is_partial_then_final_hash_aggregate(cells):
     assert "HashAggregate" in pre and "HashAggregate" in post
 
 
-def test_quality_dist_has_no_sort_based_percentile(cells):
-    plan = _plan(quality_dist(cells, bins=[(1, 4), (5, 8)]))
-    assert "SortAggregate" not in plan
-    assert "ObjectHashAggregate" not in plan  # percentile() would force one
-    assert plan.count("HashAggregate") >= 2
+def test_quality_dist_result_has_no_exchange_or_join(cells):
+    """The histogram job runs inside the call; the returned frame is a
+    local relation of one row per bin."""
+    df = quality_dist(cells, bins=[(1, 4), (5, 8)])
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan
+    assert "Join" not in plan
+    assert df.count() == 2
 
 
 def test_parquet_scan_pushes_filters_and_prunes_columns(spark):
@@ -243,7 +246,7 @@ def test_pairwise_hamming_has_no_explode(spark):
 def test_pwm_seq_fold_is_zero_shuffle(spark):
     """Round 9: calculate_pwm_seq is a pure row-local projection - no
     Exchange (no groupBy reassembly), no Generate (no cells explode),
-    no Join (the PWM is a literal map in the plan, not a relation)."""
+    no Join (the PWM is a literal array in the plan, not a relation)."""
     from seqtables_spark.operators.pwm import calculate_pwm_seq
 
     reads = spark.createDataFrame(

@@ -396,80 +396,6 @@ def test_curate_funnel_counts_need_no_join(monkeypatch, spark):
     )
 
 
-# ---- quality_dist row-local bin lookup (round-12 optimization) -----
-
-
-def test_quality_dist_lookup_matches_range_join(spark):
-    """The element_at literal-array bin assignment must be
-    row-identical to the broadcast range join it replaced, including
-    the fastqc (75,79) coverage gap (rows there are DROPPED, the
-    inner-join semantics)."""
-    from seqtables_spark.operators import quality as Q
-
-    rows = [
-        (f"r{i}", p, (i * 7 + p * 3) % 40 + 1)
-        for i in range(40)
-        for p in range(1, 96)
-    ]
-    cells = spark.createDataFrame(
-        rows, "read_id string, position long, qual long"
-    )
-    got = {
-        tuple(r) for r in Q.quality_dist(cells, bins="fastqc").collect()
-    }
-    # force the fallback path by monkeying the span guard to 0
-    orig = Q._BIN_LOOKUP_MAX_SPAN
-    try:
-        Q._BIN_LOOKUP_MAX_SPAN = 0
-        want = {
-            tuple(r) for r in Q.quality_dist(cells, bins="fastqc").collect()
-        }
-    finally:
-        Q._BIN_LOOKUP_MAX_SPAN = orig
-    assert got == want
-    # the (75,79) gap: no bin named for those positions in the output
-    for r in got:
-        assert not any(str(p) in r[0].split("-") for p in (76, 77, 78))
-
-
-def test_quality_dist_lookup_plan_has_single_cross(spark):
-    """Plan pin: with preset bins the only nested-loop node left is
-    the tiny hist x percentile cross — the cells-side range join is
-    a row-local projection now."""
-    from seqtables_spark.operators.quality import quality_dist
-
-    cells = spark.createDataFrame(
-        [(f"r{i}", i % 9 + 1, i % 30 + 1) for i in range(200)],
-        "read_id string, position long, qual long",
-    )
-    df = quality_dist(cells, bins="even")
-    # executedPlan().toString() lists each physical node exactly once
-    # (the formatted explain's doubled tree+detail mentions were a
-    # brittle pin — r12 ADVICE): exactly ONE nested-loop node = the
-    # hist x pct cross
-    exec_plan = df._jdf.queryExecution().executedPlan().toString()
-    assert exec_plan.count("BroadcastNestedLoopJoin") == 1
-    assert "element_at" in _plan(df)
-
-
-def test_quality_dist_overlapping_bins_fall_back_to_join(spark):
-    """Overlapping explicit bins must keep the range join (a position
-    matching two bins emits a row per match)."""
-    from seqtables_spark.operators.quality import quality_dist
-
-    cells = spark.createDataFrame(
-        [(f"r{i}", i % 6 + 1, i % 20 + 1) for i in range(60)],
-        "read_id string, position long, qual long",
-    )
-    df = quality_dist(cells, bins=[(1, 4), (3, 6)])
-    # TWO nested-loop nodes in the executed plan (one mention each —
-    # r12 ADVICE dropped the doubled formatted-explain counting): the
-    # kept range join plus the hist x pct cross
-    exec_plan = df._jdf.queryExecution().executedPlan().toString()
-    assert exec_plan.count("BroadcastNestedLoopJoin") == 2
-    assert df.count() == 2  # one row per bin, both covering position 3-4
-
-
 def test_dedup_survivors_pref_losers_planned_once(spark):
     """Plan pin: the anti-join pushed below a corpus Union must read
     the checkpointed loser ids (ExistingRDD), not re-plan the

@@ -155,15 +155,15 @@ def test_ranks_boundary_none_is_value_identical(spark):
 
 
 def test_quality_dist_empty_bins_returns_empty(spark):
-    """r12 ADVICE: bins=[] raised ValueError in the literal-lookup
-    path; the range-join path it replaced returned an empty result."""
-    from seqtables_spark.operators.quality import _attach_bins
+    """r12 ADVICE: bins=[] must return an empty result with the bin
+    columns, not raise."""
+    from seqtables_spark.operators.quality import quality_dist
 
     cells = spark.createDataFrame(
         [("r1", 1, 30), ("r2", 2, 20)],
         "read_id string, position long, qual long",
     )
-    out = _attach_bins(spark, cells, [])
+    out = quality_dist(cells, bins=[])
     assert out.count() == 0
     assert {"bin_name", "bin_lo", "bin_hi"} <= set(out.columns)
 

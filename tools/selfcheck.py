@@ -87,7 +87,7 @@ PERF_ADJUDICATED = {
     "bam_roundtrip": "real file I/O + BGZF codec on both engines, fixture harness",
     "fastq_roundtrip": "real file I/O fixture harness",
     "sam_roundtrip": "real file I/O fixture harness",
-    "pwm_score": "r10 adjudication: one Project, zero shuffle, literal map constant-folded (plan inspected); warm 0.22s over 5k derived reads = doc->reads fixture derivation + stage floor. Unrolled non-HOF A/B measured identical (0.20-0.24s), so the HOF fold is NOT the cost",
+    "pwm_score": "one Project, zero shuffle; the weights are one flat literal array indexed by (position, letter slot), O(1) per cell. At W=24 the cost is the doc->reads fixture derivation + stage floor (r10: warm 0.22s over 5k derived reads). The r10 claim that the HOF fold is not the cost held only at that width: the earlier literal-map lookup scanned the map per cell, O(N*P*|PWM|); 2,000 reads on a 4-core host, Spark local[2]: 0.30/0.66/1.39/3.33 s at P=25/50/100/200 with the map vs 0.20/0.21/0.32/0.49 s with the array",
     "pwm_log_score": "same r10 adjudication as pwm_score (same fixture derivation + floor; log path differs only in the final exp)",
     "jsonl_roundtrip": "real file I/O fixture harness (write + schema-pinned read-back)",
     "image_resize": "r9 decomposition at sf0.1: 0.16s scan + 0.22s python-worker roundtrip (the operator is a Pandas UDF by design) + 0.38s pyspark Row collect of 77k exploded pixel rows (protocol-counted output, not plan; count-vs-collect delta). The packed variant image_thumbs_packed removes the 77k-row collect",

@@ -177,9 +177,9 @@ SF1_RATIO_ADJUDICATED = {
     " 0.55 s); growth 1.7x on 10x data",
     "bloom_contamination": "bounded bloom build (broadcast) + probe"
     " scan, two stages; 2.05x at 1.16 s absolute = bar-edge",
-    "quality_dist_fastqc": "bounded bin-boundary broadcast relation"
-    " + one agg (BNLJ adjudicated in PLANAUDIT); 2.07x at 1.3 s ="
-    " bar-edge stage floor",
+    "quality_dist_fastqc": "one (position, qual) histogram job,"
+    " bins and percentiles on the driver over <= |positions| x |phred|"
+    " rows; 2.07x at 1.3 s (older join plan) = bar-edge stage floor",
     "stratified_sample": "per-stratum deterministic hash filter -"
     " one scan, zero exchange; 0.211 s absolute vs a 27 ms oracle IS"
     " the dispatch floor",
